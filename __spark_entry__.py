@@ -898,8 +898,8 @@ def knn_sites(spark: SparkSession, sf: str) -> DataFrame:
 
 def mvt_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     """S9 encode → D1-D8 decode round-trip, ORACLED: per-order synthetic
-    point features are encoded into per-tile MVT protobufs (applyInPandas)
-    and decoded back (mapInPandas); the oracle recomputes the input
+    point features are encoded into per-tile MVT protobufs (mapInArrow)
+    and decoded back (mapInArrow); the oracle recomputes the input
     relationally — a lossless codec must hash-match it exactly.
     Covers varint/zigzag/delta command streams + key/value dictionaries
     (ref DecodeGeometry.cs:31-91, VectorTileReader.cs:148-375)."""

@@ -3,11 +3,13 @@ decode kernel as a table function so plain-SQL sessions can do
 
     SELECT f.* FROM tiles, LATERAL decode_mvt(zoom, x, y, mvt) AS f
 
-The UDTF is a thin per-row wrapper over the same strict kernel the
-DataFrame path uses (kernels.mvt.decode_tile); the DataFrame API
-(`sources.tiles.decode_tiles`) remains the hot path — it is
-whole-Arrow-batch vectorized, while a UDTF yields row-at-a-time and is
-meant for ad-hoc SQL exploration, not the 100 TB pipeline.
+The UDTF is a thin per-row wrapper over the per-tile decoder
+(kernels.mvt.decode_tile, lenient) with its own props formatting
+(sorted keys, NULL for a feature without properties). The DataFrame API
+(`sources.tiles.decode_tiles`) is the hot path — one mapInArrow over the
+whole-batch kernel (kernels.mvt_batch), while a UDTF yields
+row-at-a-time and is meant for ad-hoc SQL exploration, not the 100 TB
+pipeline.
 """
 
 from __future__ import annotations

@@ -30,9 +30,19 @@ reference's observable semantics (and documented quirks):
 Value model: each decoded value is a (type_tag, python_value) pair so
 re-encode is lossless (type_tag ∈ 1..7 per Constants.cs:74-80).
 
-Decoding walks bytes with a per-TILE Python loop (amortized across
-thousands of features per tile); the hot geometry stream is handed to
-vectorized numpy (kernels.geom / kernels.pbf).
+Decoding walks bytes with a per-TILE Python loop; the geometry stream
+is handed to vectorized numpy (kernels.geom / kernels.pbf). The Spark
+codec path (sources.tiles.decode_tiles / encode_tiles) runs on the
+batch kernel in kernels/mvt_batch.py instead; this module keeps three
+roles:
+
+- the strict gate: ``decode_tile(validate=True)`` is the one home of the
+  validation suite above, run per tile before the batch decode in
+  strict mode (its messages are the strict error strings);
+- the independent per-tile oracle the tests compare the batch codec
+  against (and the row-at-a-time decoder of the SQL UDTF);
+- the wire constants and the value codec (``_decode_value`` /
+  ``_encode_value``) the batch kernel imports.
 """
 
 from __future__ import annotations

@@ -19,6 +19,8 @@ calls to kernels.pbf.encode_varint_stream / decode_varint_stream.
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 import numpy as np
 
 from . import pbf
@@ -460,54 +462,6 @@ def decode_geometries_batch(
 # whole-batch tile encode/decode (the Spark-facing entry points)
 # ---------------------------------------------------------------------------
 
-def encode_tile_rows(
-    tile_bounds: np.ndarray,   # int64 (ntiles+1) — feature spans per tile
-    feature_id: np.ndarray,
-    geom_type: np.ndarray,
-    part_offsets: list,        # per-feature int arrays (local offsets)
-    xs_list: list, ys_list: list,
-    props_json: list,          # per-feature JSON string or None
-    layer_name: str,
-    extents: np.ndarray,       # int64 per tile
-    version: int = 2,
-    props_typed: list | None = None,  # per-feature list of tagged-union
-    # structs {k, tag, s, f, d, i, u, si, b}; overrides props_json and
-    # preserves Float/Double/UInt/SInt/Bool type identity that a JSON
-    # round-trip cannot (SURVEY §1.3; VectorTileReader.cs:166-214)
-) -> list[bytes]:
-    """Encode features (sorted + grouped by tile via tile_bounds) into one
-    MVT blob per tile. Geometry/varint/assembly is batch-vectorized across
-    ALL tiles; only dictionary building (props) is per-feature Python.
-
-    Byte-identical to the per-tile path (mvt.encode_tile over
-    mvt.Layer/Feature built by sources.tiles.encode_tiles' original
-    implementation)."""
-    nfeat = feature_id.size
-
-    # --- flatten ragged vertices/parts (global indexing)
-    vcounts = np.fromiter((len(a) for a in xs_list), dtype=np.int64, count=nfeat)
-    vert_off = np.zeros(nfeat + 1, dtype=np.int64)
-    np.cumsum(vcounts, out=vert_off[1:])
-    xs = np.concatenate([np.asarray(a, dtype=np.int64) for a in xs_list]) if nfeat else np.empty(0, np.int64)
-    ys = np.concatenate([np.asarray(a, dtype=np.int64) for a in ys_list]) if nfeat else np.empty(0, np.int64)
-    pcounts = np.fromiter(
-        (max(len(p) - 1, 0) for p in part_offsets), dtype=np.int64, count=nfeat
-    )
-    feat_part_off = np.zeros(nfeat + 1, dtype=np.int64)
-    np.cumsum(pcounts, out=feat_part_off[1:])
-    part_off = np.empty(int(feat_part_off[-1]), dtype=np.int64)
-    w = 0
-    for i, p in enumerate(part_offsets):
-        k = max(len(p) - 1, 0)
-        if k:
-            part_off[w : w + k] = np.asarray(p[:-1], dtype=np.int64) + vert_off[i]
-            w += k
-    return _encode_from_flat(
-        tile_bounds, feature_id, geom_type, xs, ys, vert_off, part_off,
-        feat_part_off, props_json, props_typed, layer_name, extents, version,
-    )
-
-
 def encode_tile_rows_flat(
     tile_bounds: np.ndarray,
     feature_id: np.ndarray,
@@ -519,13 +473,21 @@ def encode_tile_rows_flat(
     po_off: np.ndarray,        # int64 (nfeat+1) spans into po_flat
     props_json: list,
     layer_name: str,
-    extents: np.ndarray,
+    extents: np.ndarray,       # int64 per tile
     version: int = 2,
+    props_typed: list | None = None,  # per-feature list of tagged-union
+    # structs {k, tag, s, f, d, i, u, si, b}; overrides props_json and
+    # preserves Float/Double/UInt/SInt/Bool type identity that a JSON
+    # round-trip cannot (SURVEY §1.3; VectorTileReader.cs:166-214)
 ) -> list[bytes]:
-    """Arrow fast path: same encode as :func:`encode_tile_rows` but fed
-    directly from ListArray value/offset buffers — the global part-offset
-    table is built by vector ops instead of a per-feature Python loop.
-    Byte-identical output (asserted in tests)."""
+    """Encode features (sorted + grouped by tile via ``tile_bounds``, the
+    (ntiles+1) feature spans) into one MVT blob per tile, fed directly
+    from Arrow ListArray value/offset buffers. Geometry, varints and
+    message assembly are batch-vectorized across ALL tiles (the global
+    part-offset table is built by vector ops); only dictionary building
+    (props) is per-feature Python. Byte-identical to mvt.encode_tile
+    over the same features (tests pin both to the hand-authored wire
+    goldens)."""
     nfeat = feature_id.size
     pc = np.diff(po_off)
     pcounts = np.maximum(pc - 1, 0)
@@ -543,7 +505,7 @@ def encode_tile_rows_flat(
     return _encode_from_flat(
         tile_bounds, feature_id, geom_type,
         xs.astype(np.int64, copy=False), ys.astype(np.int64, copy=False),
-        vert_off, part_off, feat_part_off, props_json, None,
+        vert_off, part_off, feat_part_off, props_json, props_typed,
         layer_name, extents, version,
     )
 
@@ -706,9 +668,11 @@ def _parse_feature_headers(
     it with ~(#fields) masked numpy rounds over the whole batch).
 
     Returns (fid u64, gt i64, tag_start, tag_end, geom_start, geom_end,
-    err bool) — spans are absolute offsets into ``allbuf``; rows with
-    ``err`` must invalidate their whole tile (same semantics as the
-    per-tile exception in the scalar path)."""
+    raster_start, raster_end, err bool) — spans are absolute offsets
+    into ``allbuf`` (raster_start is -1 when the feature has no
+    length-delimited tag-5 field); rows with ``err`` must invalidate
+    their whole tile (same semantics as the per-tile exception in the
+    scalar path)."""
     n = fstart.size
     fid = np.zeros(n, dtype=np.uint64)
     gt = np.zeros(n, dtype=np.int64)
@@ -716,6 +680,8 @@ def _parse_feature_headers(
     tend = np.zeros(n, dtype=np.int64)
     gstart = np.zeros(n, dtype=np.int64)
     gend = np.zeros(n, dtype=np.int64)
+    rstart = np.full(n, -1, dtype=np.int64)
+    rend = np.full(n, -1, dtype=np.int64)
     err = np.zeros(n, dtype=bool)
     p = fstart.astype(np.int64).copy()
     end = fend.astype(np.int64)
@@ -740,7 +706,8 @@ def _parse_feature_headers(
             m = isv & (tag == 3)
             gt[m] = val[m].astype(np.int64)
             newp[isv] = p3[isv]
-        # wire type 2: length-delimited (F_TAGS tag 2, F_GEOMETRY tag 4)
+        # wire type 2: length-delimited (F_TAGS tag 2, F_GEOMETRY tag 4,
+        # F_RASTER tag 5)
         isl = active & (wt == 2)
         if isl.any():
             sl, p4, e2 = _vec_varint_at(allbuf, p2, isl, end)
@@ -757,6 +724,9 @@ def _parse_feature_headers(
             m = isl & (tag == 4)
             gstart[m] = p4[m]
             gend[m] = ld_end[m]
+            m = isl & (tag == 5)
+            rstart[m] = p4[m]
+            rend[m] = ld_end[m]
             newp[isl] = ld_end[isl]
         # fixed-width unknowns
         isf32 = active & (wt == 5)
@@ -769,7 +739,7 @@ def _parse_feature_headers(
         p = newp
         active = active & ~err & (p < end)
     err |= active  # field-count cap exceeded
-    return fid, gt, tstart, tend, gstart, gend, err
+    return fid, gt, tstart, tend, gstart, gend, rstart, rend, err
 
 
 #: value-union tag → struct field name (SURVEY §1.3 typed property union;
@@ -870,29 +840,54 @@ def layers_index(blobs: list) -> tuple[list, list, list, dict]:
     return t_out, n_out, c_out, errs
 
 
+class DecodedRows(NamedTuple):
+    """Per-feature columns of one decoded batch, in the flat layout
+    ``pyarrow.ListArray.from_arrays`` wants: ragged vertex and part
+    lists are flat value arrays plus offset vectors."""
+
+    tile_idx: np.ndarray      # int64 per feature: index into ``blobs``
+    layer: list               # layer name per feature
+    extent: list              # layer extent per feature
+    feature_id: np.ndarray    # int64
+    geom_type: np.ndarray     # int64
+    xs: np.ndarray            # flat int64 vertices (all features)
+    ys: np.ndarray
+    vert_off: np.ndarray      # int64 (nfeat+1) vertex spans into xs/ys
+    parts_flat: np.ndarray    # int32 LOCAL part offsets incl. trailing end
+    parts_cnt: np.ndarray     # int64 per feature: entries in parts_flat
+    props: list               # JSON properties string per feature
+    errors: dict              # {tile_idx: error_str} for error-row tiles
+    props_t: list | None = None  # typed union rows (``typed_props=True``)
+    raster: list | None = None   # tag-5 payload or None (``raster=True``)
+
+
 def decode_tile_rows(
     blobs: list,
     typed_props: bool = False,
-    flat: bool = False,
+    flat: bool = True,
     layer_filter: frozenset | set | None = None,
-) -> tuple:
-    """Decode a batch of tile blobs → flat per-feature columns.
+    validate: bool = False,
+    raster: bool = False,
+) -> DecodedRows:
+    """Decode a batch of tile blobs → flat per-feature columns
+    (:class:`DecodedRows`). Undecodable tiles produce no feature rows
+    and an ``errors`` entry instead (lenient: one bad tile never fails
+    the batch).
 
-    Returns (tile_idx, layer_names, extents, feature_ids, geom_types,
-    xs_list, ys_list, off_list, props_list, err_tiles) where err_tiles is
-    {tile_idx: error_str} for undecodable tiles (lenient mode). With
-    ``typed_props=True`` an 11th element is appended: per-feature
-    ``list[dict]`` rows of the tagged union struct
-    (k, tag, s, f, d, i, u, si, b) preserving Float/Double/UInt/SInt/Bool
-    type identity end-to-end (VectorTileReader.cs:166-214).
-
-    ``flat=True`` (the mapInArrow fast path) replaces the three ragged
-    per-feature array lists with FLAT arrays + offset vectors — built by
-    pure vector ops, no per-feature slicing loop — returning
-    (tile_idx i64, layer_names, extents, feature_ids i64, geom_types,
-    xs_flat, ys_flat, vert_off (nfeat+1), parts_flat i32,
-    parts_cnt (per-feature), props_list, err_tiles); exactly the shape
-    ``pyarrow.ListArray.from_arrays`` wants.
+    - ``validate=True`` gates every tile through the strict per-tile
+      decoder ``kernels.mvt.decode_tile(validate=True)`` (the reference's
+      full check suite, VectorTileReader.cs:31-375) before the batch
+      decode; a tile that fails it gets that exception's exact message.
+    - ``typed_props=True`` fills ``props_t``: per-feature ``list[dict]``
+      rows of the tagged union struct (k, tag, s, f, d, i, u, si, b)
+      preserving Float/Double/UInt/SInt/Bool type identity
+      (VectorTileReader.cs:166-214).
+    - ``raster=True`` fills ``raster``: the Feature.Raster (tag 5)
+      payload bytes, or None for features without one.
+    - ``layer_filter`` decodes only the named layers (lazy name-only
+      peek; unselected layers never decode dictionaries or features).
+    - ``flat`` is accepted for compatibility and must stay True: the
+      flat layout is the only one.
 
     Tile/layer structure walk is per-tile Python (few iterations);
     feature headers, varint streams and geometry are batch-vectorized
@@ -901,6 +896,9 @@ def decode_tile_rows(
 
     from . import mvt as mk
     from .pbf import read_key, read_varint, skip
+
+    if not flat:
+        raise ValueError("decode_tile_rows: only the flat layout exists")
 
     # per-layer records from the python tile/layer walk
     lay_tile: list[int] = []
@@ -916,6 +914,8 @@ def decode_tile_rows(
     for ti, blob in enumerate(blobs):
         try:
             data = bytes(blob)
+            if validate:  # strict gate: raises with the reference's message
+                mk.decode_tile(data, validate=True)
             if len(data) == 0:
                 raise mk.MvtError("tile data is empty")
             if len(data) >= 2 and data[0] == 0x1F and data[1] == 0x8B:
@@ -1011,23 +1011,14 @@ def decode_tile_rows(
     counts = np.fromiter(
         (len(f) for f in lay_fs), dtype=np.int64, count=nlayers
     )
-    if flat and typed_props:
-        raise ValueError(
-            "decode_tile_rows: flat mode does not carry props_t — "
-            "use the pandas path for typed properties"
-        )
     nfeat = int(counts.sum())
-    if flat:
-        empty = (
-            np.empty(0, np.int64), [], [], np.empty(0, np.int64),
-            np.empty(0, np.int64), np.empty(0, np.int64),
-            np.empty(0, np.int64), np.zeros(1, np.int64),
-            np.empty(0, np.int32), np.empty(0, np.int64), [], err_tiles,
-        )
-    else:
-        empty = ([], [], [], [], [], [], [], [], [], err_tiles)
-        if typed_props:
-            empty = empty + ([],)
+    empty = DecodedRows(
+        np.empty(0, np.int64), [], [], np.empty(0, np.int64),
+        np.empty(0, np.int64), np.empty(0, np.int64),
+        np.empty(0, np.int64), np.zeros(1, np.int64),
+        np.empty(0, np.int32), np.empty(0, np.int64), [], err_tiles,
+        [] if typed_props else None, [] if raster else None,
+    )
     if nfeat == 0:
         return empty
 
@@ -1049,9 +1040,8 @@ def decode_tile_rows(
         (e for fs in lay_fs for _, e in fs), dtype=np.int64, count=nfeat
     )
 
-    fid_u, gt_a, tstart, tend, gstart, gend, ferr = _parse_feature_headers(
-        allbuf, fstart, fend
-    )
+    (fid_u, gt_a, tstart, tend, gstart, gend, rstart, rend,
+     ferr) = _parse_feature_headers(allbuf, fstart, fend)
 
     # a malformed feature invalidates its whole tile (scalar-path parity)
     feat_tile = np.asarray(lay_tile, dtype=np.int64)[feat_layer]
@@ -1066,6 +1056,7 @@ def decode_tile_rows(
         fid_u, gt_a = fid_u[keep], gt_a[keep]
         tstart, tend = tstart[keep], tend[keep]
         gstart, gend = gstart[keep], gend[keep]
+        rstart, rend = rstart[keep], rend[keep]
         nfeat = int(feat_layer.size)
 
     # --- batch varint decode of all geometry + tag streams
@@ -1110,6 +1101,7 @@ def decode_tile_rows(
             feat_layer, feat_tile = feat_layer[keep], feat_tile[keep]
             fid_u, gt_a = fid_u[keep], gt_a[keep]
             gstart, gend = gstart[keep], gend[keep]
+            rstart, rend = rstart[keep], rend[keep]
             tag_vals = tag_vals[np.repeat(keep, tcounts)]
             tcounts = tcounts[keep]
             nfeat = int(feat_layer.size)
@@ -1134,29 +1126,10 @@ def decode_tile_rows(
         if typed_props else None
     )
 
-    tidx = feat_tile.tolist() if not flat else feat_tile
-    lnames = [lay_name[l] for l in feat_layer]
-    exts = [lay_ext[l] for l in feat_layer]
-    fids = fid_u.view(np.int64).tolist() if not flat else fid_u.view(np.int64)
-    gtypes = gt_a.tolist() if not flat else gt_a
-
-    xs_list: list[np.ndarray] = []
-    ys_list: list[np.ndarray] = []
-    off_list: list[np.ndarray] = []
     props_list: list = []
-    props_t_list: list = []
+    props_t_list: list | None = [] if typed_props else None
     tag_pairs = tag_vals.astype(np.int64)
     for f in range(nfeat):
-        if not flat:
-            p0, p1 = int(feat_part_off[f]), int(feat_part_off[f + 1])
-            v0 = int(part_off_g[p0]) if p0 < p1 else 0
-            v1 = int(part_off_g[p1]) if p0 < p1 else 0
-            xs_list.append(xs[v0:v1])
-            ys_list.append(ys[v0:v1])
-            off_list.append(
-                (part_off_g32[p0 : p1 + 1] - np.int32(v0))
-                if p0 < p1 else np.zeros(1, np.int32)
-            )
         lid = feat_layer[f]
         kf = key_frags[lid]
         vf = val_frags[lid]
@@ -1182,24 +1155,26 @@ def decode_tile_rows(
                 {"k": ks[int(tag_pairs[j])], **vt[int(tag_pairs[j + 1])]}
                 for j in range(t0, t1 - 1, 2)
             ])
-    if flat:
-        # per-feature vertex spans: contiguous and ordered by feature,
-        # so the offsets vector is a single gather
-        vert_off = part_off_g[feat_part_off]
-        pd_diff = np.diff(feat_part_off)
-        sizes = np.where(pd_diff > 0, pd_diff + 1, 1)
-        pb = np.zeros(nfeat + 1, dtype=np.int64)
-        np.cumsum(sizes, out=pb[1:])
-        within = np.arange(int(pb[-1]), dtype=np.int64) - np.repeat(
-            pb[:-1], sizes
-        )
-        src = np.repeat(feat_part_off[:-1], sizes) + within
-        parts_flat = part_off_g32[src] - np.repeat(
-            part_off_g32[feat_part_off[:-1]], sizes
-        )
-        return (
-            tidx, lnames, exts, fids, gtypes, xs, ys, vert_off,
-            parts_flat, sizes, props_list, err_tiles,
-        )
-    out = (tidx, lnames, exts, fids, gtypes, xs_list, ys_list, off_list, props_list, err_tiles)
-    return out + (props_t_list,) if typed_props else out
+    # per-feature vertex spans: contiguous and ordered by feature, so
+    # the offsets vector is a single gather
+    vert_off = part_off_g[feat_part_off]
+    pd_diff = np.diff(feat_part_off)
+    sizes = np.where(pd_diff > 0, pd_diff + 1, 1)
+    pb = np.zeros(nfeat + 1, dtype=np.int64)
+    np.cumsum(sizes, out=pb[1:])
+    within = np.arange(int(pb[-1]), dtype=np.int64) - np.repeat(pb[:-1], sizes)
+    src = np.repeat(feat_part_off[:-1], sizes) + within
+    parts_flat = part_off_g32[src] - np.repeat(
+        part_off_g32[feat_part_off[:-1]], sizes
+    )
+    rasters = (
+        [bytes(allbuf[s:e]) if s >= 0 else None
+         for s, e in zip(rstart.tolist(), rend.tolist())]
+        if raster else None
+    )
+    return DecodedRows(
+        feat_tile, [lay_name[l] for l in feat_layer],
+        [lay_ext[l] for l in feat_layer], fid_u.view(np.int64), gt_a,
+        xs, ys, vert_off, parts_flat, sizes, props_list, err_tiles,
+        props_t_list, rasters,
+    )

@@ -43,10 +43,17 @@ from pyspark.sql import DataFrame
 
 
 def _as_long(fr) -> int:
-    """Exact BIGINT from a rational measure: integral values pass
-    through; otherwise round exactly on the Fraction (never through
-    float — large rationals would overflow or lose precision)."""
-    return int(fr) if fr.denominator == 1 else round(fr)
+    """Exact BIGINT from a rational measure. Integral values pass
+    through (never through float — large rationals would overflow or
+    lose precision); a non-integral one raises, because no rounding
+    rule is shared with the oracle (Python's round() sends halves to
+    even, DuckDB's ROUND away from zero)."""
+    if fr.denominator != 1:
+        raise ValueError(
+            f"non-integral measure {fr}: BIGINT output needs an "
+            "integral (integer-event) corpus"
+        )
+    return int(fr)
 
 
 CONVEX_PAIR_SCHEMA = (

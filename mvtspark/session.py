@@ -8,6 +8,24 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory() -> str:
+    """``MVTSPARK_DRIVER_MEM`` when set (a deployment setting), else
+    ``min(24g, half of physical memory)`` read from ``/proc/meminfo`` —
+    a fixed 24g heap gets the JVM OOM-killed on smaller hosts."""
+    env = os.environ.get("MVTSPARK_DRIVER_MEM")
+    if env:
+        return env
+    cap_mb = 24 * 1024
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return f"{min(cap_mb, int(line.split()[1]) // 2048)}m"
+    except OSError:  # no /proc (non-Linux): keep the fixed cap
+        pass
+    return f"{cap_mb}m"
+
+
 def get_spark(
     app: str = "mvtspark",
     cores: int | None = None,
@@ -47,7 +65,7 @@ def get_spark(
         # bytecode interpreter — observed as 10-60x slowdowns on
         # expression-heavy stages (many regex/string features per row)
         .config("spark.sql.codegen.hugeMethodLimit", "8000")
-        .config("spark.driver.memory", os.environ.get("MVTSPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Djava.net.preferIPv4Stack=true")
     )

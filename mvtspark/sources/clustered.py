@@ -12,7 +12,7 @@ them — the same reason Iceberg/Delta ship `ZORDER BY`.
 
 The z-value is a pure native bitwise expression (shiftleft/AND/OR over
 longs), so the clustering key is computed inside whole-stage codegen —
-no UDF, no Python, and the write's range exchange is the ONLY shuffle.
+no Python, and the write's one exchange is the ONLY shuffle.
 Reads need no knowledge of the layout: Spark pushes the bbox predicate
 to the parquet reader (PushedFilters on x/y), which skips non-matching
 row groups via the very statistics the layout tightened.
@@ -24,6 +24,8 @@ tiling pipeline's persisted stages.
 """
 
 from __future__ import annotations
+
+import math
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -64,19 +66,39 @@ def write_zordered(
 ) -> None:
     """Write ``df`` as parquet clustered along the Z-order curve.
 
-    ``repartitionByRange`` on the z-value splits the curve into
-    ``n_files`` contiguous segments (one range exchange — the single
-    shuffle of the write); ``sortWithinPartitions`` then orders rows
-    inside each file so row-group min/max stats on BOTH x and y are
-    tight.  ``n_files`` is the scale knob: pick data_size /
-    target_file_size (e.g. 1 GB files) so each file still covers a
-    compact square of the curve.
+    The curve is cut into ``n_files`` contiguous segments at z-value
+    quantiles of a fixed-seed sample, and each row goes straight to its
+    segment's partition (``repartitionById`` — the single shuffle of
+    the write); ``sortWithinPartitions`` then orders rows inside each
+    file so row-group min/max stats on BOTH x and y are tight.  The
+    fixed seed makes the layout reproducible (``repartitionByRange``
+    seeds its boundary sample with an RDD id, so its files depend on
+    how many jobs the session ran before).
+    ``n_files`` is the scale knob: pick data_size / target_file_size
+    (e.g. 1 GB files) so each file still covers a compact square of the
+    curve.
     """
+    from pyspark.ml.feature import Bucketizer
+
     out = df
     if z_col not in df.columns:
         out = df.withColumn(z_col, zvalue(F.col(x_col), F.col(y_col)))
+    # sample size as Spark's range exchange: 100 per partition, <= 1e6
+    frac = min(1.0, min(100 * n_files, 1e6) / max(out.count(), 1))
+    zs = sorted(
+        r[0] for r in out.select(z_col).sample(fraction=frac, seed=0).collect()
+        if r[0] is not None
+    )
+    picks = [zs[i * len(zs) // n_files] for i in range(1, n_files)] if zs else []
+    cuts = sorted(set(map(float, picks)))
+    seg = Bucketizer(
+        splits=[-math.inf, *cuts, math.inf], inputCol=z_col,
+        outputCol="_zseg", handleInvalid="keep",  # null z -> own segment
+    )
     (
-        out.repartitionByRange(n_files, z_col)
+        seg.transform(out)
+        .repartitionById(n_files, F.col("_zseg").cast("int"))
+        .drop("_zseg")
         .sortWithinPartitions(z_col)
         .write.mode("overwrite")
         .parquet(path)

@@ -11,7 +11,7 @@ from mvtspark.kernels.polyclip import (
     convex_pair_stats,
     ring_area2,
 )
-from mvtspark.operators.boolean import _coverage_grid
+from mvtspark.operators.boolean import _as_long, _coverage_grid
 
 # ---------------------------------------------------------------- helpers
 
@@ -83,6 +83,20 @@ def _rand_convex(rng, cx, cy, r, k=8):
 
 
 # ---------------------------------------------------------------- convex
+
+
+def test_as_long_rejects_non_integral_measure():
+    """A half-integral measure must raise, not round: Python's round()
+    sends halves to even (5/2 -> 2) while DuckDB's ROUND sends them away
+    from zero (-> 3), so a rounded BIGINT would silently disagree with
+    the oracle. Integral measures pass through exactly."""
+    from fractions import Fraction
+
+    assert _as_long(Fraction(12, 3)) == 4
+    assert _as_long(Fraction(-(2**70), 1)) == -(2**70)
+    for bad in (Fraction(5, 2), Fraction(-5, 2), Fraction(1, 3)):
+        with pytest.raises(ValueError, match="non-integral"):
+            _as_long(bad)
 
 
 def test_clip_convex_squares_golden():

@@ -19,6 +19,7 @@ Reference parity targets:
 """
 
 import numpy as np
+import pytest
 
 from mvtspark.kernels import geom, mvt, mvt_batch
 
@@ -257,6 +258,12 @@ def test_typed_props_from_hand_authored_bytes(spark):
     assert got_strict == got
 
 
+def _feat_xy(d, i):
+    """Feature ``i``'s vertices from a flat decode_tile_rows result."""
+    v0, v1 = int(d.vert_off[i]), int(d.vert_off[i + 1])
+    return d.xs[v0:v1].tolist(), d.ys[v0:v1].tolist()
+
+
 def test_batch_kernel_oversized_ld_length_poisons_only_its_tile():
     """A crafted length-delimited field declaring a 2^63-byte payload
     previously went negative after the int64 cast in
@@ -271,13 +278,12 @@ def test_batch_kernel_oversized_ld_length_poisons_only_its_tile():
         + bytes([0x12, len(feature)]) + feature
     )
     hostile = bytes([0x1A, len(layer)]) + layer
-    (tile_idx, names, extents, fids, gtypes,
-     xs_l, ys_l, off_l, props_l, errs) = mvt_batch.decode_tile_rows(
+    d = mvt_batch.decode_tile_rows(
         [GOLDEN_SINGLE_POINT, hostile, GOLDEN_SINGLE_POINT])
-    assert set(errs) == {1}
-    assert sorted(set(tile_idx)) == [0, 2]
-    for i in range(len(tile_idx)):
-        assert np.asarray(xs_l[i]).tolist() == [25]
+    assert set(d.errors) == {1}
+    assert sorted(set(d.tile_idx.tolist())) == [0, 2]
+    for i in range(len(d.tile_idx)):
+        assert _feat_xy(d, i)[0] == [25]
 
 
 def test_batch_kernel_decodes_hand_authored_bytes():
@@ -289,24 +295,30 @@ def test_batch_kernel_decodes_hand_authored_bytes():
         GOLDEN_TYPED_VALUES,
         GOLDEN_TWO_LAYERS,
     ]
-    (tile_idx, names, extents, fids, gtypes,
-     xs_l, ys_l, off_l, props_l, err_tiles) = mvt_batch.decode_tile_rows(blobs)
-    assert err_tiles == {}
-    rows = list(zip(tile_idx, names, extents, fids, gtypes))
+    d = mvt_batch.decode_tile_rows(blobs)
+    assert d.errors == {}
+    rows = list(zip(d.tile_idx.tolist(), d.layer, d.extent,
+                    d.feature_id.tolist(), d.geom_type.tolist()))
     # tiles 0 and 1 decode to the identical logical feature
     assert rows[0] == (0, "layer_name", 4096, 123, 1)
     assert rows[1] == (1, "layer_name", 4096, 123, 1)
-    assert np.asarray(xs_l[0]).tolist() == [25]
-    assert np.asarray(xs_l[1]).tolist() == [25]
+    assert _feat_xy(d, 0)[0] == [25]
+    assert _feat_xy(d, 1)[0] == [25]
     # tile 2: spec linestring
     i2 = [i for i, r in enumerate(rows) if r[0] == 2][0]
-    assert names[i2] == "types" and gtypes[i2] == 2
-    assert np.asarray(xs_l[i2]).tolist() == [2, 2, 10]
-    assert np.asarray(ys_l[i2]).tolist() == [2, 10, 10]
+    assert d.layer[i2] == "types" and d.geom_type[i2] == 2
+    assert _feat_xy(d, i2) == ([2, 2, 10], [2, 10, 10])
     # tile 3: two layers in order, polygon ring re-closed
     i3 = [i for i, r in enumerate(rows) if r[0] == 3]
-    assert [names[i] for i in i3] == ["poly", "layer_name"]
-    assert np.asarray(xs_l[i3[0]]).tolist() == [3, 8, 20, 3]
+    assert [d.layer[i] for i in i3] == ["poly", "layer_name"]
+    assert _feat_xy(d, i3[0])[0] == [3, 8, 20, 3]
+
+
+def test_batch_kernel_rejects_non_flat_layout():
+    """The flat layout is the only return shape: asking for the
+    removed ragged-list shape must fail loudly, not return it."""
+    with pytest.raises(ValueError, match="flat"):
+        mvt_batch.decode_tile_rows([GOLDEN_SINGLE_POINT], flat=False)
 
 
 def test_invalid_corpus_every_class_detected():
@@ -345,7 +357,7 @@ def test_invalid_corpus_batch_kernel_poisons_only_bad_tiles():
 
     blobs = [INVALID_CLASSES[c][1] for c in sorted(INVALID_CLASSES)]
     out = mvt_batch.decode_tile_rows(blobs)
-    tile_idx, errs = out[0], out[9]
+    tile_idx, errs = out.tile_idx.tolist(), out.errors
     assert 0 not in errs  # intact control decodes
     assert 0 in tile_idx
     structural = {1, 2, 3, 5, 18}  # unreadable at the wire level
@@ -365,12 +377,12 @@ def test_layers_index_partial_parse():
 def test_layer_filter_skips_unselected_layers():
     out = mvt_batch.decode_tile_rows(
         [GOLDEN_TWO_LAYERS], layer_filter=frozenset({"poly"}))
-    tidx, names = out[0], out[1]
-    assert names == ["poly"] and out[9] == {}
+    assert out.layer == ["poly"] and out.errors == {}
+    assert out.tile_idx.tolist() == [0]
     # duplicate-name detection still fires for SKIPPED layers
     dup = GOLDEN_TWO_LAYERS + bytes([0x1A, len(_LAYER_D_BODY)]) + _LAYER_D_BODY
     out2 = mvt_batch.decode_tile_rows([dup], layer_filter=frozenset({"nope"}))
-    assert 0 in out2[9] and "duplicate" in out2[9][0]
+    assert 0 in out2.errors and "duplicate" in out2.errors[0]
 
 
 def test_decode_tiles_layer_filter_dataframe(spark):
@@ -398,13 +410,13 @@ def test_batch_decode_mid_walk_error_commits_no_partial_layers():
     dup = GOLDEN_TWO_LAYERS + bytes([0x1A, len(_LAYER_D_BODY)]) + _LAYER_D_BODY
     # order 1: bad tile first — previously leaked a garbage feature row
     out = mvt_batch.decode_tile_rows([dup, GOLDEN_SINGLE_POINT])
-    tidx, errs = out[0], out[9]
-    assert set(errs) == {0} and "duplicate" in errs[0]
-    assert set(tidx) == {1}
+    assert set(out.errors) == {0} and "duplicate" in out.errors[0]
+    assert set(out.tile_idx.tolist()) == {1}
     # order 2: bad tile last — previously raised IndexError (batch kill)
     out2 = mvt_batch.decode_tile_rows([GOLDEN_SINGLE_POINT, dup])
-    assert set(out2[9]) == {1} and set(out2[0]) == {0}
-    # flat (arrow) path: same contract
+    assert set(out2.errors) == {1} and set(out2.tile_idx.tolist()) == {0}
+    # explicit flat=True (the keyword the benchmark harness passes):
+    # same contract, same positional layout (errors at index 11)
     out3 = mvt_batch.decode_tile_rows([GOLDEN_SINGLE_POINT, dup], flat=True)
     assert set(out3[11]) == {1} and set(out3[0].tolist()) == {0}
     # layers_index: no partial index rows for the errored tile

@@ -4,7 +4,10 @@ files touches a small fraction of files/row groups, while the identical
 data in a hash layout is untouchable by stats pruning.  Also pins the
 native zvalue expression to the numpy Morton twin in kernels/cells."""
 
+import os
+
 import numpy as np
+import pyarrow.compute as pc
 import pytest
 from pyspark.sql import functions as F
 
@@ -87,3 +90,28 @@ def test_bbox_read_correct_and_pushed(spark, layouts):
         .count()
         == 0
     )
+
+
+def test_zorder_layout_is_reproducible(spark, tmp_path):
+    """The same data written twice must land in the same files. Spark's
+    range exchange seeds its boundary sample with an RDD id, so the
+    boundaries depended on how many jobs the session had run before —
+    the same data pruned to 1, 2 or 3 files for the test box above."""
+    import pyarrow.parquet as pq
+
+    def file_ranges(path):
+        out = set()
+        for f in sorted(os.listdir(path)):
+            if f.endswith(".parquet"):
+                z = pq.read_table(os.path.join(path, f), columns=["z"])["z"]
+                out.add((pc.min(z).as_py(), pc.max(z).as_py()))
+        return out
+
+    layouts = []
+    for i in range(3):
+        spark.range(i + 1).collect()  # move the session's RDD counter
+        path = str(tmp_path / f"z{i}")
+        write_zordered(_grid_points(spark), path, n_files=16)
+        layouts.append(file_ranges(path))
+    assert len(layouts[0]) == 16
+    assert layouts[0] == layouts[1] == layouts[2]

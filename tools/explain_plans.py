@@ -38,9 +38,9 @@ AUDITS = {
     "ann_topk": ["MapInPandas", "WindowGroupLimit"],
     "ann_topk_ivf": ["BroadcastHashJoin", "Aggregate"],
     "range_join_px": ["BroadcastNestedLoopJoin"],
-    # tag-5 passthrough rides the per-tile kernel (opt-in pandas path);
-    # md5/length stay codegen-side above the single MapInPandas decode
-    "raster_passthrough": ["MapInPandas", "codegen id"],
+    # tag-5 passthrough: the decode is the Arrow map (the MapInPandas
+    # is the tile generator); md5/length stay codegen-side above it
+    "raster_passthrough": ["MapInArrow", "MapInPandas", "codegen id"],
     # span generation must be pure codegen (no Python) with map-side
     # partial aggregation below the one span-key exchange
     "repeated_spans": ["Generate", "HashAggregate", "codegen id"],
@@ -68,8 +68,9 @@ AUDITS = {
     # flagship: decoded-count and image-count joins over the tile key +
     # the salted two-stage aggregation; generation/codec ride Python maps
     "flagship_mvt_pipeline": ["HashAggregate", "MapInArrow"],
-    # typed-union round trip rides the pandas path (props_t dictionaries)
-    "mvt_typed_props_roundtrip": ["MapInPandas"],
+    # typed-union round trip: encode and decode are each one Arrow map
+    # (props_t rides the same batch codec as the JSON props)
+    "mvt_typed_props_roundtrip": ["MapInArrow"],
     # encode is Arrow-native end-to-end; the index scan itself is a
     # partial parse inside MapInPandas
     "layers_index_scan": ["MapInArrow", "MapInPandas"],
