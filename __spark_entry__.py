@@ -122,7 +122,7 @@ def semi_join_customers(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def anti_join_customers(spark: SparkSession, sf: str) -> DataFrame:
-    """Left-anti join (J7 — the checkpoint-resume shape, sources/checkpoint.py)."""
+    """Left-anti join (J7)."""
     c = _t(spark, sf, "customer")
     o = _t(spark, sf, "orders").where(F.col("o_orderstatus") == "P")
     return c.join(o, c.c_custkey == o.o_custkey, "left_anti").select(

@@ -17,13 +17,18 @@ Local (sandbox) smoke:
     python jobs/run_pipeline.py --images synth:20000 --zoom 8 \
         --tiles-out /tmp/mvt_out/tiles --checkpoint /tmp/mvt_out/ckpt
 
-Stages (each records per-partition lineage + row counts in the
-checkpoint table; --resume anti-joins planned tiles against completed
-ones so a killed job restarts at partition granularity):
+Stages:
   1. assign   — native Web-Mercator tile assignment (D19, codegen)
   2. join     — broadcast PIP spatial join against tile rings (J4)
   3. agg      — salted two-stage per-tile counts (A7)
   4. encode   — per-(zoom,x,y) MVT protobuf encode (S9) + decode-parity
+
+Resume is per unit: the job's tiles are one unit, <tiles-out>/job=<job-id>/,
+written by sources.checkpoint.commit_unit (overwrite, then the lineage
+marker: per-(zoom, partition) row counts). Rerunning a committed job id
+writes nothing; rerunning a killed one (`--resume --job-id J`; --resume
+needs --job-id) redoes the whole unit. The agg stage's per-partition
+counts are written after the commit, so a rerun never duplicates them.
 """
 
 from __future__ import annotations
@@ -64,15 +69,14 @@ def main() -> None:
         assign_tiles, salted_tile_counts, spatial_join_pip,
     )
     from mvtspark.sources.checkpoint import (
-        pending_work, read_checkpoint, write_stage_checkpoint,
+        commit_unit, write_stage_checkpoint,
     )
     from mvtspark.sources.images import synth_points
     from mvtspark.sources.tiles import decode_tiles, encode_tiles
 
     if args.resume and not args.job_id:
-        # a fresh random id would match NO checkpoint rows: the anti-join
-        # re-plans everything and append-mode writing then DUPLICATES the
-        # finished tiles — fail loudly instead of silently redoing work
+        # a fresh random id names a new unit: the killed run's unit would
+        # be left uncommitted and its work silently redone under a new id
         ap.error("--resume requires --job-id (the id of the killed run)")
     job_id = args.job_id or f"pipeline-{uuid.uuid4().hex[:8]}"
 
@@ -88,13 +92,6 @@ def main() -> None:
 
     assigned = assign_tiles(images, zoom=args.zoom, extent=args.extent)
 
-    if args.resume:
-        ckpt = read_checkpoint(spark, args.checkpoint)
-        planned = assigned.select("zoom", "x", "y").distinct()
-        todo = pending_work(planned, ckpt, job_id=job_id, stage="encode",
-                            keys=("zoom", "x", "y"))
-        assigned = assigned.join(F.broadcast(todo), ["zoom", "x", "y"], "left_semi")
-
     ring_x = F.array(*[F.lit(v).cast("long")
                        for v in (0, args.extent, args.extent, 0, 0)])
     ring_y = F.array(*[F.lit(v).cast("long")
@@ -106,11 +103,6 @@ def main() -> None:
     )
     joined = spatial_join_pip(assigned, polys, broadcast_dim=True)
 
-    counts = salted_tile_counts(joined, salt_buckets=args.salt_buckets)
-    write_stage_checkpoint(counts, args.checkpoint, job_id=job_id,
-                           stage="agg", lineage="salted_tile_counts",
-                           part_cols=("zoom",))
-
     feats = joined.select(
         "zoom", "x", "y", F.col("extent"),
         F.xxhash64("image_id").bitwiseAND(F.lit((1 << 62) - 1)).alias("feature_id"),
@@ -121,13 +113,14 @@ def main() -> None:
         F.to_json(F.struct("caption")).alias("props"),
     )
     tiles = encode_tiles(feats, layer_name="images")
-    tiles.write.mode("append").parquet(args.tiles_out)
+    unit = f"job={job_id}"
+    if commit_unit(tiles, args.tiles_out, unit, args.checkpoint,
+                   job_id=job_id, lineage="encode_tiles"):
+        counts = salted_tile_counts(joined, salt_buckets=args.salt_buckets)
+        write_stage_checkpoint(counts, args.checkpoint, job_id=job_id,
+                               stage="agg", lineage="salted_tile_counts")
 
-    written = spark.read.parquet(args.tiles_out)
-    write_stage_checkpoint(written, args.checkpoint, job_id=job_id,
-                           stage="encode", lineage="encode_tiles",
-                           part_cols=("zoom", "x", "y"))
-
+    written = spark.read.parquet(os.path.join(args.tiles_out, unit))
     bad = (
         decode_tiles(written.select("zoom", "x", "y", "mvt"))
         .where(F.col("decode_error").isNotNull()).count()

@@ -452,6 +452,10 @@ def decode_jpeg(data: bytes) -> np.ndarray:
     while pos < len(data):
         if data[pos] != 0xFF:
             raise ValueError("JPEG marker sync lost")
+        while pos + 1 < len(data) and data[pos + 1] == 0xFF:
+            pos += 1  # fill bytes before a marker (T.81 B.1.1.2)
+        if pos + 1 >= len(data):
+            raise ValueError("JPEG marker truncated")
         marker = data[pos + 1]
         pos += 2
         if marker == 0xD9:  # EOI
@@ -461,6 +465,8 @@ def decode_jpeg(data: bytes) -> np.ndarray:
         if pos + 2 > len(data):
             raise ValueError("JPEG segment truncated")
         ln = struct.unpack_from(">H", data, pos)[0]
+        if ln < 2:  # the length field counts its own two bytes
+            raise ValueError(f"JPEG segment length {ln} < 2")
         body = data[pos + 2 : pos + ln]
         if pos + ln > len(data):
             raise ValueError("JPEG segment overruns payload")

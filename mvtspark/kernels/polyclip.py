@@ -36,7 +36,10 @@ import numpy as np
 
 def ring_area2(xs: np.ndarray, ys: np.ndarray) -> float:
     """TWICE the signed shoelace area (CCW positive). Kept doubled so
-    integer-coordinate rings stay integer-exact in float64."""
+    an integer-coordinate ring's result is an integer, exact in float64
+    while 2·n·M² <= 2**53 (n vertices, M = max |coordinate|): every
+    product, term and partial sum then stays below 2**53. E.g. M <= 2**25
+    for n <= 4, M <= 2**20 for n <= 4096; beyond, the sum is rounded."""
     x2 = np.roll(xs, -1)
     y2 = np.roll(ys, -1)
     return float(np.sum(xs * y2 - x2 * ys))
@@ -53,7 +56,12 @@ def clip_convex(
 
     The subject may be any simple ring; the CLIP ring must be convex
     (S-H's correctness domain). For a convex subject the result is the
-    true convex intersection — clipper ctIntersection on this domain.
+    convex intersection — clipper ctIntersection on this domain — up
+    to float64 rounding: each crossing vertex is computed as
+    a + t·(b − a) with t = si / (si − sj), so it is rounded, and later
+    clip edges test rounded vertices. Only the inside test of an input
+    integer vertex against an integer clip edge is exact, while
+    |coordinate| <= 2**25 (|side| <= 8·M² <= 2**53).
     """
     ox = np.asarray(sx, dtype=np.float64)
     oy = np.asarray(sy, dtype=np.float64)
@@ -88,8 +96,11 @@ def _proper_crossings(
     ax: np.ndarray, ay: np.ndarray, bx: np.ndarray, by: np.ndarray
 ) -> int:
     """Count edge pairs of rings A and B that PROPERLY cross (strictly
-    opposite sides both ways) — integer-exact for integer inputs, and
-    replayed verbatim by the oracle's pairwise-edge SQL."""
+    opposite sides both ways) — replayed verbatim by the oracle's
+    pairwise-edge SQL. Exact for integer inputs with |coordinate| <=
+    2**25: each side value is at most 8·M² <= 2**53, so it is computed
+    exactly in float64, and the sign of a product of two exact values
+    is exact even where the product itself is rounded."""
     na, nb = len(ax), len(ay)
     a1x, a1y = ax, ay
     a2x, a2y = np.roll(ax, -1), np.roll(ay, -1)
@@ -120,7 +131,8 @@ def minkowski_sum_convex(
     through [0, 2π)), two-pointer-merge the edge lists by angle
     (cross-product comparator — no trig), fuse exactly-parallel
     same-direction edges, and cumsum from the summed start vertices.
-    O(|A| + |B|), integer-exact for integer inputs (vertices are sums
+    O(|A| + |B|), integer-exact for integer inputs with |coordinate| <=
+    2**25 (the edge cross products stay below 2**53; vertices are sums
     of input coordinates). Validated three ways in tests: against the
     hull of all pairwise vertex sums and against the angular-order
     area identity the SQL oracle replays."""
@@ -170,7 +182,9 @@ def convex_pair_stats(
 ) -> tuple[float, float, int, int]:
     """(inter_area2, union_area2, n_union_rings, n_crossings) for two
     convex CCW rings — areas DOUBLED (shoelace numerators) so integer
-    inputs keep integer-exact A/B areas.
+    inputs keep integer A/B areas, exact within :func:`ring_area2`'s
+    bound. The intersection (hence union) area is rounded — see
+    :func:`clip_convex`.
 
     union ring count: 1 when the interiors meet (overlap or
     containment), 2 when the interiors are disjoint — a measure-zero

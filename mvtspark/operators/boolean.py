@@ -412,8 +412,10 @@ def offset_rectilinear(rings: DataFrame, radius: int) -> DataFrame:
     [min-r, max+r] x [y-r, y+r], which absorbs the per-vertex squares.
     Coverage of the compressed grid decides membership: a cell is in
     the region iff its CENTER is inside the base ring (crossing-number
-    over vertical edges — exact: centers are half-integers, edges
-    integer) or inside any edge rectangle. Handles non-convex rings
+    over vertical edges — exact: every vertex coordinate is a grid cut,
+    so each cell center lies strictly between two cuts and never on an
+    edge; the float64 centers are exact while |coordinate| < 2**52) or
+    inside any edge rectangle. Handles non-convex rings
     (L/U/T fences) — the shapes D17's strictly-convex offset rejects."""
     if radius < 0:
         raise ValueError("offset_rectilinear requires radius >= 0: a "
@@ -440,8 +442,9 @@ def offset_rectilinear(rings: DataFrame, radius: int) -> DataFrame:
                 cxs = (xs[:-1] + xs[1:]) / 2.0
                 cys = (ys[:-1] + ys[1:]) / 2.0
                 # crossing-number PIP of every cell center vs the base
-                # ring: vertical edges only (rectilinear), center x is
-                # half-integer so no on-edge ambiguity
+                # ring: vertical edges only (rectilinear); every vertex
+                # coordinate is a grid cut, so a center lies strictly
+                # between cuts — never on an edge, no on-edge ambiguity
                 vert = vx == nx_
                 ex = vx[vert].astype(np.float64)
                 ey0 = np.minimum(vy, ny_)[vert].astype(np.float64)

@@ -1,9 +1,10 @@
-"""Checkpoint / lineage table + partition-granular resume (S8/J7, north rule).
+"""Checkpoint / lineage table and the one exactly-once unit commit
+(S8, north rule) of the batch job and both streaming sinks: a unit
+(``job=<id>``, ``epoch=<id>``) is committed when its marker rows exist.
 
 Production target is an Iceberg table (``writeTo(...).append()``); the
 sandbox has no Iceberg jars, so the same semantics run on an append-only
-parquet directory — identical schema (FIXTURES.md §5), identical resume
-logic (left-anti join of planned work units vs completed keys). The
+parquet directory with an identical schema (FIXTURES.md §5). The
 storage backend is a one-line switch.
 
 Schema: job_id string, stage string, zoom int, part_id int,
@@ -24,61 +25,85 @@ CHECKPOINT_SCHEMA = (
 
 
 def write_stage_checkpoint(
-    df: DataFrame,
-    path: str,
-    job_id: str,
-    stage: str,
-    lineage: str,
-    part_cols: tuple[str, ...] = ("zoom",),
+    df: DataFrame, path: str, job_id: str, stage: str, lineage: str
 ) -> None:
-    """Record per-partition-unit row counts for a completed stage.
+    """Append per-(zoom, partition) row counts of ``df`` for ``stage``.
 
     ``part_id`` is the physical partition id (spark_partition_id) —
-    together with the logical partition columns it gives per-partition
-    lineage + metrics (A8).
+    together with ``zoom`` it gives per-partition lineage + metrics
+    (A8). One output file: its job commit is a single rename.
     """
     agg = (
-        df.groupBy(*part_cols, F.spark_partition_id().alias("part_id"))
+        df.groupBy("zoom", F.spark_partition_id().alias("part_id"))
         .agg(F.count(F.lit(1)).alias("row_count"))
         .select(
             F.lit(job_id).alias("job_id"),
             F.lit(stage).alias("stage"),
-            *[F.col(c).cast("int") for c in part_cols],
+            F.col("zoom").cast("int"),
             F.col("part_id"),
             F.col("row_count"),
             F.lit(lineage).alias("lineage"),
             F.current_timestamp().alias("ts"),
         )
     )
-    agg.write.mode("append").parquet(path)
+    agg.coalesce(1).write.mode("append").parquet(path)
 
 
 def read_checkpoint(spark: SparkSession, path: str) -> DataFrame:
-    """Empty-on-absent read of the lineage table.
+    """Empty-on-absent read of the lineage table, always as
+    :data:`CHECKPOINT_SCHEMA` (not as whichever file is listed first).
 
     Storage-agnostic: a local-only ``os.path.exists`` probe would make
     every absence check silently succeed on object-store paths
-    (s3a://…), voiding the committed-epoch guard in the streaming sink.
-    The local fast path stays (cheap, no JVM call) but the fallback is
-    catch-path-missing, which any Hadoop filesystem reports."""
+    (s3a://…), voiding the committed-unit guard. The local fast path
+    stays (cheap, no JVM call) but the fallback is catch-path-missing,
+    which any Hadoop filesystem reports."""
     if "://" not in path and not os.path.exists(path):
         return spark.createDataFrame([], CHECKPOINT_SCHEMA)
     try:
-        return spark.read.parquet(path)
+        return spark.read.schema(CHECKPOINT_SCHEMA).parquet(path)
     except Exception as e:  # AnalysisException PATH_NOT_FOUND
         if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
             return spark.createDataFrame([], CHECKPOINT_SCHEMA)
         raise
 
 
-def pending_work(
-    planned: DataFrame, checkpoint: DataFrame, job_id: str, stage: str,
-    keys: tuple[str, ...] = ("zoom",),
-) -> DataFrame:
-    """Resume: planned work units minus completed ones (left-anti, J7)."""
-    done = (
-        checkpoint.where((F.col("job_id") == job_id) & (F.col("stage") == stage))
-        .select(*keys)
-        .distinct()
+def committed_units(
+    spark: SparkSession, checkpoint_path: str, job_id: str, key: str
+) -> list[str]:
+    """Sorted values ``v`` of ``job_id``'s committed ``key=v`` units —
+    the stages with a lineage marker (metrics rows, not data)."""
+    rows = (
+        read_checkpoint(spark, checkpoint_path)
+        .where((F.col("job_id") == job_id)
+               & F.col("stage").startswith(f"{key}="))
+        .select("stage").distinct().collect()
     )
-    return planned.join(done, list(keys), "left_anti")
+    return sorted(r.stage.split("=", 1)[1] for r in rows)
+
+
+def commit_unit(
+    df: DataFrame, root: str, unit: str, checkpoint_path: str,
+    job_id: str, lineage: str,
+) -> bool:
+    """Write ``df`` as unit ``root/<unit>/`` (``unit = "key=value"``)
+    exactly once. A committed unit is skipped (returns False). Otherwise
+    the unit's directory is overwritten, so a crashed attempt's files
+    are replaced, and its marker — per-(zoom, partition) row counts
+    read back from the committed files, ``stage = unit`` — is appended
+    LAST (returns True). A crash before the marker leaves the unit
+    uncommitted for readers and for the next attempt."""
+    spark = df.sparkSession
+    key, value = unit.split("=", 1)
+    if value in committed_units(spark, checkpoint_path, job_id, key):
+        return False
+    out = os.path.join(root, unit)
+    df.write.mode("overwrite").parquet(out)
+    # a marker append killed before its job commit leaves its task files
+    # in _temporary, and the next job commit there would publish them as
+    # a second marker (one writer per lineage directory is assumed)
+    tmp = spark._jvm.org.apache.hadoop.fs.Path(checkpoint_path, "_temporary")
+    tmp.getFileSystem(spark._jsc.hadoopConfiguration()).delete(tmp, True)
+    write_stage_checkpoint(spark.read.parquet(out), checkpoint_path,
+                           job_id=job_id, stage=unit, lineage=lineage)
+    return True

@@ -15,10 +15,10 @@ wrappers the north rule's ingestion side needs:
   the watermark; the aggregation is the same partial/final hash-agg
   Spark plans for batch (map-side partials per micro-batch).
 - :func:`stream_encode_sink` — ``foreachBatch`` writer that runs the
-  batch MVT encoder on each micro-batch and appends per-partition
-  lineage rows to the checkpoint table (S8), so a killed stream resumes
-  at (micro-batch, partition) granularity on top of Spark's own
-  offset-log checkpointing.
+  batch MVT encoder on each micro-batch and commits it as one unit with
+  per-partition lineage rows (``sources.checkpoint.commit_unit``, S8),
+  so a killed stream replays at micro-batch granularity on top of
+  Spark's own offset-log checkpointing, exactly once.
 
 Scale notes: no driver-side state; watermark bounds the agg state store;
 the encode groupBy reuses the (zoom, x, y) partitioning; checkpoint
@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.spatial import assign_tiles
+from ..sources.checkpoint import commit_unit, committed_units
 
 POINTS_STREAM_SCHEMA = (
     "image_id string, caption string, lat double, lng double, ingest_ts timestamp"
@@ -84,21 +85,6 @@ def stream_tile_counts(
     )
 
 
-def _epoch_committed(
-    spark: SparkSession, checkpoint_path: str, job_id: str, stage: str
-) -> bool:
-    """True iff this epoch's lineage commit marker already exists —
-    the shared idempotence probe of every exactly-once epoch writer."""
-    from ..sources.checkpoint import read_checkpoint
-
-    return bool(
-        read_checkpoint(spark, checkpoint_path)
-        .where((F.col("job_id") == job_id) & (F.col("stage") == stage))
-        .limit(1)
-        .count()
-    )
-
-
 def make_epoch_batch_writer(
     zoom: int,
     tiles_path: str,
@@ -109,40 +95,26 @@ def make_epoch_batch_writer(
 
     Structured Streaming guarantees at-least-once delivery to
     foreachBatch: after a crash the same (batch data, epoch_id) is
-    REPLAYED. Exactly-once therefore needs the writer to be idempotent
-    per epoch, which this one is by construction:
+    REPLAYED. Each epoch's tiles are therefore one unit of
+    :func:`~mvtspark.sources.checkpoint.commit_unit`: written to their
+    own ``epoch=<id>/`` directory with overwrite, lineage marker
+    (``stage = epoch=<id>``) last, and skipped when the marker exists —
+    a replay of a half-written epoch replaces its files, a replay of a
+    committed epoch is a no-op.
 
-    1. each epoch's tiles land in their own ``epoch=<id>/`` directory
-       written with mode("overwrite") — a replay of a half-written
-       epoch replaces the partial files instead of appending duplicates.
-       SCHEMA NOTE for readers of the old flat-append layout: the sink
-       now exposes an extra ``epoch`` partition-discovery column, and a
-       raw ``spark.read.parquet(tiles_path)`` can observe a partially
-       committed epoch during the crash window before its marker /
-       replay. Use :func:`read_stream_tiles` — it drops ``epoch``
-       (restoring the flat schema) and, given the checkpoint path,
-       filters to committed epochs only;
-    2. the lineage row (``stage = epoch=<id>``) is written LAST — it is
-       the commit marker; and
-    3. an epoch whose marker already exists returns without writing
-       anything, so a replay of a fully-committed epoch is a no-op
-       (no duplicate tiles AND no duplicate lineage/metrics rows).
-
-    The committed check reads the lineage table with job_id/stage
-    pushed into the parquet scan — bounded by epochs × partition-units
-    (metrics rows, not data), and in the Iceberg production shape the
-    same probe is a metadata-only lookup.
+    SCHEMA NOTE for readers of the old flat-append layout: the sink
+    exposes an extra ``epoch`` partition-discovery column, and a raw
+    ``spark.read.parquet(tiles_path)`` can observe a half-written epoch
+    during the crash window before its replay. Use
+    :func:`read_stream_tiles` — it drops ``epoch`` (restoring the flat
+    schema) and, given the checkpoint path, filters to committed epochs.
 
     Exposed separately from the stream wiring so tests can drive the
     crash-replay matrix directly (tests/test_streaming.py).
     """
-    from ..sources.checkpoint import write_stage_checkpoint
     from ..sources.tiles import encode_tiles
 
     def _batch(df: DataFrame, epoch_id: int) -> None:
-        stage = f"epoch={epoch_id}"
-        if _epoch_committed(df.sparkSession, checkpoint_path, job_id, stage):
-            return  # replay of a committed epoch: exactly-once no-op
         assigned = assign_tiles(df, zoom=zoom)
         feats = assigned.select(
             "zoom", "x", "y", F.lit(4096).alias("extent"),
@@ -155,17 +127,11 @@ def make_epoch_batch_writer(
             F.array(F.col("py")).alias("ys"),
             F.to_json(F.struct("caption")).alias("props"),
         )
-        tiles = encode_tiles(feats, layer_name="images").cache()
-        try:
-            tiles.write.mode("overwrite").parquet(
-                os.path.join(tiles_path, stage)
-            )
-            write_stage_checkpoint(
-                tiles, checkpoint_path, job_id=job_id,
-                stage=stage, lineage=f"stream epoch {epoch_id}",
-            )
-        finally:
-            tiles.unpersist()
+        commit_unit(
+            encode_tiles(feats, layer_name="images"), tiles_path,
+            f"epoch={epoch_id}", checkpoint_path, job_id,
+            lineage=f"stream epoch {epoch_id}",
+        )
 
     return _batch
 
@@ -214,12 +180,8 @@ def make_counts_maintenance_writer(
     semantically.
     """
     from ..operators.incremental import tile_count_deltas
-    from ..sources.checkpoint import write_stage_checkpoint
 
     def _batch(df: DataFrame, epoch_id: int) -> None:
-        stage = f"epoch={epoch_id}"
-        if _epoch_committed(df.sparkSession, checkpoint_path, job_id, stage):
-            return
         assigned = assign_tiles(df, zoom=zoom)
         changes = assigned.select(
             F.lit(None).cast("int").alias("old_x"),
@@ -227,17 +189,11 @@ def make_counts_maintenance_writer(
             F.col("x").cast("int").alias("new_x"),
             F.col("y").cast("int").alias("new_y"),
         )
-        deltas = tile_count_deltas(changes, zoom, levels).cache()
-        try:
-            deltas.write.mode("overwrite").parquet(
-                os.path.join(counts_path, stage)
-            )
-            write_stage_checkpoint(
-                deltas, checkpoint_path, job_id=job_id,
-                stage=stage, lineage=f"counts epoch {epoch_id}",
-            )
-        finally:
-            deltas.unpersist()
+        commit_unit(
+            tile_count_deltas(changes, zoom, levels), counts_path,
+            f"epoch={epoch_id}", checkpoint_path, job_id,
+            lineage=f"counts epoch {epoch_id}",
+        )
 
     return _batch
 
@@ -257,32 +213,12 @@ def read_stream_tiles(
     never even listed into the read."""
     led = spark.read.parquet(tiles_path)
     if checkpoint_path is not None:
-        committed = _committed_epoch_ids(spark, checkpoint_path, job_id)
+        committed = [
+            int(e) for e in
+            committed_units(spark, checkpoint_path, job_id, "epoch")
+        ]
         led = led.where(F.col("epoch").isin(committed))
     return led.drop("epoch")
-
-
-def _committed_epoch_ids(
-    spark: SparkSession, checkpoint_path: str, job_id: str
-) -> list:
-    """Epoch ids whose lineage commit marker exists — the shared probe
-    of the ledger read and compaction paths. Bounded by epochs
-    (metrics rows, not data); compaction keeps the live list short."""
-    from ..sources.checkpoint import read_checkpoint
-
-    return sorted(
-        {
-            int(r.stage.split("=", 1)[1])
-            for r in read_checkpoint(spark, checkpoint_path)
-            .where(
-                (F.col("job_id") == job_id)
-                & F.col("stage").startswith("epoch=")
-            )
-            .select("stage")
-            .distinct()
-            .collect()
-        }
-    )
 
 
 def read_tile_counts(
@@ -306,7 +242,10 @@ def read_tile_counts(
     fine for monitoring, not for the exactly-once claim)."""
     led = spark.read.parquet(counts_path)
     if checkpoint_path is not None:
-        committed = _committed_epoch_ids(spark, checkpoint_path, job_id)
+        committed = [
+            int(e) for e in
+            committed_units(spark, checkpoint_path, job_id, "epoch")
+        ]
         led = led.where(F.col("epoch").isin([-1, *committed]))
     return (
         led.groupBy("zoom", "x", "y")
@@ -375,7 +314,10 @@ def compact_tile_counts(
     folded epoch partitions.
     """
     _finish_compaction(counts_path)
-    committed = set(_committed_epoch_ids(spark, checkpoint_path, job_id))
+    committed = {
+        int(e)
+        for e in committed_units(spark, checkpoint_path, job_id, "epoch")
+    }
     led = spark.read.parquet(counts_path)
     fold = led.where(
         (F.col("epoch") <= upto_epoch) & (F.col("epoch") >= 0)

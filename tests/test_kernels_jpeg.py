@@ -96,6 +96,26 @@ def test_appn_com_segments_skipped():
     assert np.array_equal(decode_jpeg(patched), decode_jpeg(enc))
 
 
+def test_fill_bytes_before_marker_skipped():
+    """T.81 B.1.1.2: any marker may be preceded by 0xFF fill bytes."""
+    img = _smooth(2)
+    enc = encode_jpeg(img, 85)
+    for fill in (b"\xff", b"\xff\xff\xff"):
+        assert np.array_equal(
+            decode_jpeg(enc[:2] + fill + enc[2:]), decode_jpeg(enc)
+        )
+
+
+@pytest.mark.parametrize("ln", [0, 1])
+def test_segment_length_below_two_rejected(ln):
+    """A segment length counts its own two bytes, so 0 and 1 are
+    malformed — reported as such, not as a lost marker sync."""
+    enc = encode_jpeg(_smooth(0), 85)
+    bad = enc[:4] + struct.pack(">H", ln) + enc[6:]  # APP0 length field
+    with pytest.raises(ValueError, match="segment length"):
+        decode_jpeg(bad)
+
+
 def test_non_baseline_and_corrupt_rejected():
     img = _smooth(0)
     enc = bytearray(encode_jpeg(img, 85))

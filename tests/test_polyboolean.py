@@ -180,6 +180,74 @@ def test_convex_pair_matches_candidate_hull():
 # ------------------------------------------------------------ rectilinear
 
 
+def _cross(o, a, b):
+    return (a[0] - o[0]) * (b[1] - o[1]) - (a[1] - o[1]) * (b[0] - o[0])
+
+
+def test_ring_area2_exact_at_bound():
+    """ring_area2 is exact while 2·n·M² <= 2**53: at M = 2**25 a
+    4-vertex ring matches Python-int shoelace; past the bound (M = 2**27,
+    odd coordinates) the float sum is rounded."""
+
+    def area2(xs, ys):
+        n = len(xs)
+        return sum(xs[i] * ys[(i + 1) % n] - xs[(i + 1) % n] * ys[i]
+                   for i in range(n))
+
+    m = 2**25
+    xs, ys = [-m, m, m - 1, -m + 5], [-m + 1, -m + 3, m, m - 7]
+    got = ring_area2(np.array(xs, np.float64), np.array(ys, np.float64))
+    assert got == area2(xs, ys)
+    m = 2**27
+    xs, ys = [-m + 1, m - 1, m - 3, -m + 5], [-m + 3, -m + 7, m - 1, m - 9]
+    got = ring_area2(np.array(xs, np.float64), np.array(ys, np.float64))
+    assert got != area2(xs, ys)
+
+
+def test_proper_crossings_exact_at_bound():
+    """At |coordinate| = 2**25 the crossing count equals a Python-int
+    replay on near-degenerate pairs: a B vertex exactly on an A edge
+    (a touch, not a proper crossing) or one unit to either side."""
+    import math
+    import random
+
+    from mvtspark.kernels.polyclip import _proper_crossings
+
+    def count(ax, ay, bx, by):
+        na, nb, c = len(ax), len(bx), 0
+        for i in range(na):
+            p, q = (ax[i], ay[i]), (ax[(i + 1) % na], ay[(i + 1) % na])
+            for j in range(nb):
+                r, t = (bx[j], by[j]), (bx[(j + 1) % nb], by[(j + 1) % nb])
+                c += (_cross(p, q, r) * _cross(p, q, t) < 0
+                      and _cross(r, t, p) * _cross(r, t, q) < 0)
+        return c
+
+    m = 2**25
+    rng = random.Random(7)
+    seen = set()
+    for _ in range(300):
+        ax = [-m, m, rng.randint(-m, m)]
+        ay = [-m + rng.randint(0, 3), m - rng.randint(0, 3), m]
+        dx, dy = ax[1] - ax[0], ay[1] - ay[0]
+        g = math.gcd(dx, dy)
+        if g < 2:  # no lattice point strictly inside the A edge
+            continue
+        k = rng.randint(1, g - 1)
+        off = rng.choice((-1, 0, 1))
+        px, py = ax[0] + k * dx // g, ay[0] + k * dy // g + off
+        bx = [px, px + rng.randint(-m // 4, m // 4),
+              px + rng.randint(-m // 4, m // 4)]
+        by = [py, min(m, py + rng.randint(1, m // 4)),
+              max(-m, py - rng.randint(1, m // 4))]
+        want = count(ax, ay, bx, by)
+        got = _proper_crossings(*(np.array(v, np.float64)
+                                  for v in (ax, ay, bx, by)))
+        assert got == want
+        seen.add((off, want > 0))
+    assert (0, False) in seen and (1, True) in seen
+
+
 def test_coverage_grid_matches_bitmap():
     """Compressed coverage counts == brute-force unit-pixel bitmap."""
     rng = np.random.default_rng(5)

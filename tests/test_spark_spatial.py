@@ -1,5 +1,5 @@
 """Spark-layer tests: tile assignment, PIP join, salted agg, flagship
-parity, checkpoint resume, kNN ring join. Cross-checked against the
+parity, kNN ring join. Cross-checked against the
 pure-numpy kernels (the single-process oracle, SURVEY §5)."""
 
 import numpy as np
@@ -186,26 +186,6 @@ def test_flagship_parity(spark):
     assert len(rows) > 0
     assert all(r.parity_ok for r in rows)
     assert sum(r.image_count for r in rows) == 300
-
-
-def test_checkpoint_resume(spark, tmp_path):
-    from mvtspark.sources.checkpoint import (
-        pending_work,
-        read_checkpoint,
-        write_stage_checkpoint,
-    )
-
-    path = str(tmp_path / "ckpt")
-    planned = spark.range(10).select(F.col("id").cast("int").alias("zoom"))
-    done_df = planned.where(F.col("zoom") < 4)
-    write_stage_checkpoint(done_df, path, job_id="j1", stage="s1", lineage="test")
-    ck = read_checkpoint(spark, path)
-    assert ck.count() > 0
-    pend = pending_work(planned, ck, "j1", "s1", keys=("zoom",))
-    assert sorted(r.zoom for r in pend.collect()) == [4, 5, 6, 7, 8, 9]
-    # second stage unaffected
-    pend2 = pending_work(planned, ck, "j1", "s2", keys=("zoom",))
-    assert pend2.count() == 10
 
 
 def test_knn_ring_join(spark, images):
